@@ -10,8 +10,12 @@ so this module provides the same contract over plain parquet:
   atomically commits the pointer manifest (write temp + rename) recording
   row count, schema, per-partition lineage (partition id -> rows), and
   the full snapshot log — the bookkeeping an Iceberg snapshot + manifest
-  list carries. ``mode="append"`` commits an O(new-data) append snapshot
-  (parent directories + one new), no rewrite.
+  list carries. The lineage is read from the written files' parquet
+  footers on the driver (each file is one write task's output, so its
+  ``_pid`` column statistics have min == max), O(files) with no Spark job
+  — the way Iceberg derives manifest-entry stats from file footers.
+  ``mode="append"`` commits an O(new-data) append snapshot (parent
+  directories + one new), no rewrite.
 - ``read_table(snapshot=...)`` time-travels to any logged snapshot
   (``VERSION AS OF``); ``rollback`` is an atomic pointer swap;
   ``expire_snapshots`` deletes unreferenced data directories
@@ -30,6 +34,7 @@ from __future__ import annotations
 import json
 import os
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -127,6 +132,40 @@ def _commit_pointer(path: str, manifest: dict) -> None:
     os.rename(tmp, os.path.join(path, MANIFEST))  # atomic commit
 
 
+def _footer_lineage(snap_path: str) -> dict[str, int]:
+    """-> partition id -> rows of the snapshot written at ``snap_path``.
+
+    Spark writes one file per write task (``maxRecordsPerFile`` may split
+    a task's output over several, which sum), so the ``_pid`` column
+    ``write_table`` adds is constant within a file and the footer's
+    min/max statistics name the partition; ``num_rows`` counts it. The
+    zero-row file Spark writes for an empty frame contributes nothing,
+    as a ``groupBy("_pid").count()`` of it would. A file whose ``_pid``
+    statistics are missing or not constant raises: the lineage would not
+    describe the data written."""
+    lineage: dict[str, int] = {}
+    for fname in sorted(os.listdir(snap_path)):
+        if fname.startswith((".", "_")) or not fname.endswith(".parquet"):
+            continue
+        fpath = os.path.join(snap_path, fname)
+        meta = pq.read_metadata(fpath)
+        if meta.num_rows == 0:
+            continue
+        col = [meta.schema.column(i).path for i in range(meta.num_columns)].index("_pid")
+        pids = set()  # every row group's _pid min and max
+        for g in range(meta.num_row_groups):
+            stats = meta.row_group(g).column(col).statistics
+            pids |= {stats.min, stats.max} if stats is not None and stats.has_min_max else {None}
+        if len(pids) != 1 or None in pids:
+            raise ValueError(
+                f"{fpath}: _pid statistics missing or not constant; cannot "
+                f"derive partition lineage from the footer"
+            )
+        pid = str(pids.pop())
+        lineage[pid] = lineage.get(pid, 0) + meta.num_rows
+    return lineage
+
+
 def write_table(
     df: DataFrame,
     base_dir: str,
@@ -155,7 +194,8 @@ def write_table(
 
     Manifest content stays deterministic (no timestamps): snapshot ids
     are a monotone counter, lineage is partition id -> rows of the data
-    actually written.
+    actually written, read from the footers of the snapshot's parquet
+    files (``_footer_lineage``) rather than by a Spark scan of them.
     """
     if mode not in ("replace", "append"):
         raise ValueError(f"mode must be replace|append, got {mode!r}")
@@ -180,10 +220,7 @@ def write_table(
     out = out.withColumn("_pid", F.spark_partition_id())
     out.write.mode("overwrite").parquet(os.path.join(path, snap_dir))
 
-    spark = df.sparkSession
-    written = spark.read.parquet(os.path.join(path, snap_dir))
-    lineage_rows = written.groupBy("_pid").count().collect()
-    lineage = {str(r["_pid"]): r["count"] for r in lineage_rows}
+    lineage = _footer_lineage(os.path.join(path, snap_dir))
     new_rows = sum(lineage.values())
     if mode == "append":
         data_dirs = list(prev.get("data_dirs", [])) + [snap_dir]

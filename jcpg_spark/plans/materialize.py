@@ -25,13 +25,15 @@ kill/resume test)."""
 
 from __future__ import annotations
 
+import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
 from jcpg_spark import io as tio
 from jcpg_spark import metrics as tmetrics
-from jcpg_spark.operators import calls, canonicalize, linking, mentions, references, structural
+from jcpg_spark.caching import swap_persist
+from jcpg_spark.operators import canonicalize, linking, mentions
 
 
 @dataclass
@@ -63,8 +65,6 @@ def run_pipeline(
             summary.stages_skipped.append(name)
             summary.manifests[name] = tio.read_manifest(out_dir, name)
         else:
-            import time
-
             t0 = time.time()
             df = compute()
             summary.manifests[name] = tio.write_table(
@@ -77,7 +77,9 @@ def run_pipeline(
         return tio.read_table(spark, out_dir, name)
 
     surfaces = [r["surface"] for r in dictionary.select("surface").distinct().collect()]
-    transcripts = transcripts.persist()
+    # feeds mentions, alias pairs and both layer sets; the keyed slot
+    # releases the previous call's input, so a long session holds one
+    transcripts = swap_persist("materialize.transcripts", transcripts)
 
     m = stage(
         "mentions",
@@ -167,12 +169,10 @@ def append_conversations(
         if clash:
             raise ValueError("new_transcripts overlaps already-materialized conv_ids")
 
-    new_transcripts = new_transcripts.persist()
+    new_transcripts = swap_persist("materialize.new_transcripts", new_transcripts)
     surfaces = [r["surface"] for r in dictionary.select("surface").distinct().collect()]
 
     def stage(name: str, compute, mode: str, bucket_col: str | None = None):
-        import time
-
         t0 = time.time()
         df = compute()
         summary.manifests[name] = tio.write_table(

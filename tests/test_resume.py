@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import hashlib
 import json
+import os
 
 import pytest
 
@@ -66,6 +67,77 @@ def test_manifest_lineage(spark, dictionary, t_small, tmp_path):
     # metrics table total matches the edges manifest
     metrics = {r["pred"]: r["n_triples"] for r in tio.read_table(spark, base, "_metrics").collect()}
     assert metrics["__total__"] == man["rows"]
+
+
+def test_repeated_build_compiles_no_new_codegen_classes(spark, dictionary, t_small, tmp_path):
+    """A second run_pipeline over the same input reuses every generated
+    class: the session's codegen cache must hold a whole build. If a layer
+    grows a build past the cache size the LRU misses on every class and
+    each build recompiles all of them."""
+    codegen = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def compiled():
+        return codegen.METRIC_COMPILATION_TIME().getCount()
+
+    c0 = compiled()
+    run_pipeline(spark, t_small, dictionary, str(tmp_path / "first"))
+    c1 = compiled()
+    run_pipeline(spark, t_small, dictionary, str(tmp_path / "second"))
+    c2 = compiled()
+    assert c2 - c1 == 0, (
+        f"repeated build compiled {c2 - c1} classes (first build: {c1 - c0}); "
+        f"spark.sql.codegen.cache.maxEntries="
+        f"{spark.conf.get('spark.sql.codegen.cache.maxEntries')} no longer holds a build"
+    )
+
+
+def _snapshot_counts(spark, base, name, snapshot_id):
+    snap = os.path.join(tio.table_path(base, name), f"snap-{snapshot_id}")
+    return {str(r["_pid"]): r["count"]
+            for r in spark.read.parquet(snap).groupBy("_pid").count().collect()}
+
+
+@pytest.mark.parametrize("case", ["bucketed", "unbucketed", "empty", "append"])
+def test_footer_lineage_matches_spark_count(spark, tmp_path, case):
+    """write_table's lineage, read from parquet footers, equals a Spark
+    groupBy("_pid").count() over the files the snapshot wrote."""
+    base = str(tmp_path)
+    df = spark.range(0, 2000, numPartitions=3).selectExpr("id", "id % 7 AS k")
+    if case == "bucketed":
+        man = tio.write_table(df, base, "t", bucket_col="id", num_buckets=32)
+        snap = os.path.join(tio.table_path(base, "t"), "snap-1")
+        assert sum(f.endswith(".parquet") for f in os.listdir(snap)) == 32
+        assert man["partitions"] == 32
+    elif case == "unbucketed":
+        man = tio.write_table(df, base, "t")
+        assert man["partitions"] == 3
+    elif case == "empty":
+        man = tio.write_table(df.filter("id < 0"), base, "t")
+        assert (man["lineage"], man["rows"], man["partitions"]) == ({}, 0, 0)
+    else:
+        tio.write_table(df, base, "t", bucket_col="k", num_buckets=4)
+        man = tio.write_table(df.limit(500).repartition(2), base, "t", mode="append")
+        assert man["rows"] == 2500
+        assert sum(man["lineage"].values()) == 500
+    assert man["lineage"] == _snapshot_counts(spark, base, "t", man["snapshot_id"])
+    assert man["snapshots"][-1]["lineage"] == man["lineage"]
+
+
+def test_footer_lineage_rejects_unusable_pid_statistics(tmp_path):
+    """A file holding rows of two partitions, or without _pid statistics,
+    cannot give lineage from its footer: raise, do not guess."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    mixed, nostats = tmp_path / "mixed", tmp_path / "nostats"
+    mixed.mkdir()
+    nostats.mkdir()
+    table = pa.table({"id": [1, 2], "_pid": pa.array([0, 1], pa.int32())})
+    pq.write_table(table, mixed / "part-00000.parquet")
+    pq.write_table(table.slice(0, 1), nostats / "part-00000.parquet", write_statistics=False)
+    for snap in (mixed, nostats):
+        with pytest.raises(ValueError, match="_pid statistics"):
+            tio._footer_lineage(str(snap))
 
 
 def test_materialized_edges_match_build_graph(spark, dictionary, t_small, tmp_path):
