@@ -771,17 +771,28 @@ def ask(
     max_hops: int = 8,
 ) -> DataFrame:
     """SPARQL ASK: does the pattern have ANY solution? -> a one-row
-    DataFrame (ask: boolean) — kept relational so the answer composes
-    with joins/unions and the driver never has to collect mid-plan.
+    DataFrame (ask: boolean, not null), so the answer still composes with
+    joins/unions — but it is evaluated eagerly, when ``ask`` is called.
 
-    Evaluated as LIMIT 1 + count: Spark's CollectLimit short-circuits
+    The probe is ``DataFrame.isEmpty()``: its CollectLimit short-circuits
     scanning once one solution surfaces, so an ASK over 10^12 triples
     whose answer is yes touches a handful of partitions, not the table
     (the worst case — answer no — is one full pass, the information-
-    theoretic floor)."""
+    theoretic floor). The answer then becomes a local one-row relation.
+    Not a lazy ``limit(1)`` + count: that plans a code-generated
+    LocalLimit whose counter field Spark names per plan instance
+    (``_limit_counter_<id>``), so every such ASK compiles fresh
+    whole-stage classes; CollectLimit is not code-generated and a
+    repeated ASK with new constants compiles none. (Spark still pushes a
+    LocalLimit into each branch of a Union directly under the pattern
+    scan; the persisted ``read_graph_edges`` view is a single relation.)
+    Being eager, the returned plan is the answer's one-row VALUES, not
+    the pattern scan: ``explain()`` on it shows no scan."""
     sol = match_query(edges, bgp, filters=filters, max_hops=max_hops)
-    one = sol.limit(1).select(F.lit(1).alias("hit"))
-    return one.agg((F.count("*") > 0).alias("ask"))
+    hit = not sol.isEmpty()
+    return sol.sparkSession.sql(
+        "SELECT * FROM VALUES (:hit) AS t(ask)", args={"hit": hit}
+    )
 
 
 def describe(

@@ -4899,7 +4899,9 @@ WHERE EXISTS (SELECT 1 FROM res WHERE res.r = e.src)
 def q_kg_ask(spark, sf_dir):
     """SPARQL ASK: is there any call that returned? One-row boolean
     relation; Spark's CollectLimit short-circuits the scan on the first
-    witness, so a yes-answer never reads the full table."""
+    witness, so a yes-answer never reads the full table. Eager: the scan
+    runs when this is called, and the returned frame's plan (what a plan
+    capture records) is the answer's one-row VALUES, not the scan."""
     from jcpg_spark.operators import query as bgp
 
     t = transcripts_from_events(spark, sf_dir)

@@ -21,7 +21,16 @@ Stage graph (each node = one committed table):
 
 Determinism: all stage outputs are content-keyed and partition-invariant,
 so a resumed run's tables are row-identical to a clean run's (pytest
-kill/resume test)."""
+kill/resume test).
+
+Serving view: ``read_graph_edges`` composes the graph (committed edges
+without same_as, plus same_as derived from the current alias_mapping)
+and persists it, so the queries a caller runs on the returned frame scan
+one in-memory relation. Each call composes afresh from the current
+commits; the view occupies one ``caching`` slot, so a call releases the
+previous call's view, and ``clear_caches()`` drops it. Build paths
+(``append_conversations``' ``_metrics``) use the uncached
+``_compose_graph_edges`` so a build never pins a graph."""
 
 from __future__ import annotations
 
@@ -222,19 +231,20 @@ def append_conversations(
     linked_all = tio.read_table(spark, out_dir, "linked")
     stage("canonical", lambda: canonicalize.canonical_map(linked_all, mapping),
           mode="replace")
-    stage("_metrics", lambda: tmetrics.edge_metrics(read_graph_edges(spark, out_dir)),
+    stage("_metrics", lambda: tmetrics.edge_metrics(_compose_graph_edges(spark, out_dir)),
           mode="replace")
     return summary
 
 
-def read_graph_edges(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Current graph edge view of a materialized directory: the committed
+def _compose_graph_edges(spark: SparkSession, out_dir: str) -> DataFrame:
+    """Uncached graph edge view of a materialized directory: the committed
     per-conversation layers plus same_as derived from the CURRENT
     alias_mapping. Under ``append_conversations`` the appended snapshots
     never contain same_as rows, so deriving them here (and dropping any
     from the initial full run) keeps the composed graph exactly equal to
     a from-scratch build over the full corpus even after components
-    merged across appends."""
+    merged across appends. Build paths use this form so a build never
+    pins a graph in the cache."""
     from pyspark.sql import functions as F
 
     edges = tio.read_table(spark, out_dir, "edges")
@@ -244,3 +254,13 @@ def read_graph_edges(spark: SparkSession, out_dir: str) -> DataFrame:
     return edges.filter(F.col("pred") != "same_as").unionByName(
         canonicalize.same_as_triples(mapping)
     )
+
+
+def read_graph_edges(spark: SparkSession, out_dir: str) -> DataFrame:
+    """Serving view of a materialized directory's graph: the rows of
+    ``_compose_graph_edges`` at the current commits, persisted
+    (MEMORY_AND_DISK) so every query run on the returned frame reads one
+    in-memory relation instead of re-listing 32 bucket files, re-deriving
+    same_as and re-unioning per query. Call it once and query the frame;
+    a later call composes again and releases this call's view."""
+    return swap_persist("materialize.graph_edges", _compose_graph_edges(spark, out_dir))

@@ -317,3 +317,107 @@ def test_append_conversations_equals_full_build(spark, dictionary, tmp_path):
     # re-ingest guard: same batch again must refuse
     with _pytest.raises(ValueError, match="overlaps"):
         append_conversations(spark, t_b, dictionary, out)
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_build_paths_do_not_pin_the_graph_view(spark, dictionary, tmp_path):
+    """run_pipeline + append_conversations leave no graph view cached:
+    append's _metrics stage reads the uncached composition."""
+    from pyspark.sql import functions as F
+
+    from jcpg_spark import caching
+    from jcpg_spark.plans.materialize import _compose_graph_edges, append_conversations
+
+    t_all = synth_transcripts(spark, 12, skew=False)
+    first = sorted(r["conv_id"] for r in t_all.select("conv_id").distinct().collect())[:8]
+    out = str(tmp_path / "g")
+    caching.clear_caches()
+    run_pipeline(spark, t_all.filter(F.col("conv_id").isin(first)), dictionary, out)
+    append_conversations(spark, t_all.filter(~F.col("conv_id").isin(first)), dictionary, out)
+    assert "materialize.graph_edges" not in caching._live
+    level = _compose_graph_edges(spark, out).storageLevel
+    assert not (level.useMemory or level.useDisk), level
+
+
+def test_graph_view_serves_the_current_commit(spark, dictionary, tmp_path):
+    """read_graph_edges persists its view and equals the uncached
+    composition row for row after an append, a rollback, and a directory
+    replaced by another writer's copy; a call releases the previous
+    call's view."""
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    from jcpg_spark.plans.materialize import (
+        _compose_graph_edges,
+        append_conversations,
+        read_graph_edges,
+    )
+
+    t_all = synth_transcripts(spark, 16, skew=False).persist()
+    convs = sorted(r["conv_id"] for r in t_all.select("conv_id").distinct().collect())
+    dir1, dir2 = str(tmp_path / "a"), str(tmp_path / "b")
+    run_pipeline(spark, t_all.filter(F.col("conv_id").isin(convs[:10])), dictionary, dir1)
+    run_pipeline(spark, t_all.filter(F.col("conv_id").isin(convs[10:])), dictionary, dir2)
+
+    def fresh(out):
+        view = read_graph_edges(spark, out)
+        assert view.storageLevel.useMemory
+        assert _rows(view) == _rows(_compose_graph_edges(spark, out))
+        return view
+
+    v0 = fresh(dir1)
+    rows0 = _rows(v0)
+
+    # (a) an append to edges and a replace of alias_mapping
+    append_conversations(
+        spark, t_all.filter(F.col("conv_id").isin(convs[10:])), dictionary, dir1
+    )
+    v1 = fresh(dir1)
+    assert len(_rows(v1)) > len(rows0)
+    assert not v0.storageLevel.useMemory  # released by the later call
+
+    # (b) rollback of both tables
+    tio.rollback(dir1, "edges", 1)
+    tio.rollback(dir1, "alias_mapping", 1)
+    assert _rows(fresh(dir1)) == rows0
+
+    # (c) dir1 replaced by a copy of dir2: same snapshot ids and file
+    # paths, and no Spark write touched dir1. Spark's CacheManager matches
+    # plans by path, so the uncached composition of dir1 could itself hit
+    # a stale view; compare against rows collected from dir2 as well.
+    rows_b = _rows(_compose_graph_edges(spark, dir2))
+    assert rows_b != rows0
+    read_graph_edges(spark, dir1).count()
+    shutil.rmtree(dir1)
+    shutil.copytree(dir2, dir1)
+    assert tio.read_manifest(dir1, "edges")["snapshot_id"] == 1
+    assert _rows(fresh(dir1)) == rows_b
+    t_all.unpersist()
+
+
+def test_repeated_ask_compiles_no_new_codegen_classes(spark, dictionary, t_small, tmp_path):
+    """An ASK with new constants reuses the generated classes of the
+    previous one (a code-generated LocalLimit names its counter per plan
+    instance, so a LIMIT 1 plan compiled fresh classes on every call)."""
+    from jcpg_spark.operators.query import ask
+    from jcpg_spark.plans.materialize import read_graph_edges
+
+    base = str(tmp_path / "t")
+    run_pipeline(spark, t_small, dictionary, base)
+    edges = read_graph_edges(spark, base)
+    ents = sorted(r["src"] for r in edges.filter("pred = 'same_as'").select("src").distinct().collect())
+    assert len(ents) >= 2
+    codegen = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def answer(entity):
+        return ask(edges, [(entity, "same_as", "?y")]).collect()
+
+    assert answer("e:no_such_entity") == [(False,)]  # warm-up
+    c0 = codegen.METRIC_COMPILATION_TIME().getCount()
+    assert answer(ents[0]) == [(True,)]
+    assert answer(ents[1]) == [(True,)]
+    assert codegen.METRIC_COMPILATION_TIME().getCount() - c0 == 0
